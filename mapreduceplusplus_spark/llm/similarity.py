@@ -60,6 +60,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.llm import index_store
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
@@ -528,7 +529,7 @@ def sim_search_ivf(
 #: centroids and the probe ARE the IVF index's quantizer: bounded
 #: (≤ IVF_CENTROIDS + 1 rows), deterministic for a dataset version,
 #: and re-collected identically by every IVF-family query — the same
-#: standing index-amortization policy as ``_IVF_INDEX_CACHE`` and
+#: standing index-amortization policy as the on-disk index store and
 #: dedup's ``_SCALAR_MEMO`` (bounded census results).  Saves 2 driver
 #: jobs per warm IVF-family invocation (r16 measurement: the curve
 #: alone paid 8).
@@ -743,48 +744,14 @@ def _ivf_score_topk(
     )
 
 
-#: materialized cid-partitioned IVF indexes, keyed by (session id,
-#: sf_dir, source fingerprint) — see the build-once rationale in
-#: ``sim_search_ivf_partitioned``.  The FINGERPRINT component (file
-#: mtimes + sizes of the embeddings parquet, ADVICE r9) makes a stale
-#: read impossible: rewriting the dataset under sf_dir in-process
-#: changes the key, so the next probe rebuilds instead of silently
-#: reading the old index.  The first component of the key is
-#: ``sparkContext.applicationId`` — stable and unique per Spark
-#: CONTEXT, so (unlike the earlier ``id(session)`` key, ADVICE r10) a
-#: NEW context whose object happens to land on a recycled id can never
-#: adopt a dead context's index dir; and being a string it holds no
-#: reference, so the cache never pins dead sessions alive.  Sibling
-#: sessions from ``newSession()`` share one build (ADVICE r11) — safe
-#: because the index content is conf-independent (deterministic
-#: integer arithmetic over the parquet bytes; hostile-twin pinned).  The dirs live
-#: until process exit (a lazily-consumed plan may read one at any
-#: time), then are swept by the atexit hook — bounded at one dir per
-#: (session, dataset, dataset version), never one per invocation
-_IVF_INDEX_CACHE: dict[tuple[str, str, tuple], str] = {}
-
-
 def _embeddings_fingerprint(sf_dir: str) -> tuple:
     """(relpath, mtime_ns, size) of every file under the embeddings
-    parquet path — a cheap content-version stamp for the index cache
-    (shared helper in ``sources/tables.py`` since r11; the MinHash
-    ingest index in ``llm/dedup.py`` uses the same stamp)."""
+    parquet path — the content-version component of the seed-memo keys
+    (a rewrite of the embeddings changes it, so stale quantizer inputs
+    are never served)."""
     from mapreduceplusplus_spark.sources.tables import dataset_fingerprint
 
     return dataset_fingerprint(sf_dir, "embeddings")
-
-
-def _sweep_ivf_indexes() -> None:
-    import shutil
-
-    for d in _IVF_INDEX_CACHE.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _IVF_INDEX_CACHE.clear()
-
-
-import atexit  # noqa: E402
-
-atexit.register(_sweep_ivf_indexes)
 
 
 @query("sim_search_ivf_partitioned", oracle=_IVF_ORACLE)
@@ -812,37 +779,21 @@ def sim_search_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partition directory (``partitionOverwriteMode=dynamic``).
     Reference heritage: none (SURVEY §2 charter extension, similarity
     family)."""
-    import tempfile
-
     ensure_utc(spark)
     assigned, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
-    # The index is MEMOIZED per (session, dataset) and built exactly
-    # once — the literal "write-once batch job, probes re-read"
-    # semantics of a real on-disk ANN index, and the only layout that
-    # is safe here: the probe plan reads the index lazily (the
-    # PartitionFilters pin needs the real scan in the returned plan),
-    # so (a) a fresh dir per call could never be cleaned up and would
-    # accumulate one copy per bench rep, while (b) a single
-    # overwrite-in-place slot clobbers the part files under any
-    # EARLIER invocation's still-unconsumed plan (two sessions probing
-    # the same dataset — the hostile-config twin test — broke exactly
-    # this way).  Keyed per Spark CONTEXT (applicationId): sibling
-    # sessions from newSession() DO share a build (ADVICE r11) — safe,
-    # because the index content is conf-independent (deterministic
-    # integer seed assignment over the parquet bytes; the hostile-twin
-    # test pins identical output under different session confs) —
-    # plus the dataset fingerprint, so an in-process rewrite of sf_dir
-    # forces a rebuild instead of a stale read (ADVICE r9).
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _embeddings_fingerprint(sf_dir),
-    )
-    index_dir = _IVF_INDEX_CACHE.get(key)
-    if index_dir is None:
-        index_dir = tempfile.mkdtemp(prefix="ivf_index_")
-        assigned.write.mode("overwrite").partitionBy("cid").parquet(index_dir)
-        _IVF_INDEX_CACHE[key] = index_dir
+    # Built once per dataset version in the shared index store: the
+    # probe plan reads the index LAZILY (the PartitionFilters pin needs
+    # the real scan in the returned plan), so neither a fresh dir per
+    # call (one copy per bench rep) nor an overwrite-in-place slot
+    # (clobbers an earlier invocation's still-unconsumed plan) is safe.
+    # Sessions and processes share the build — the index content is
+    # conf-independent (deterministic integer seed assignment over the
+    # parquet bytes; the hostile-config twin test pins identical
+    # output under different session confs).
+    def _build(d: str) -> None:
+        assigned.write.mode("overwrite").partitionBy("cid").parquet(d)
+
+    index_dir = index_store.index_dir("ivf_index", sf_dir, "embeddings", _build)
     lists = spark.read.parquet(index_dir)
     cand = lists.where(
         F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
@@ -1690,26 +1641,6 @@ def sim_search_ivfpq_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivfpq_search(spark, sf_dir, metric="l2")
 
 
-#: materialized cid-partitioned IVF-PQ code indexes — same lifecycle,
-#: keying, and sweep discipline as ``_IVF_INDEX_CACHE`` /
-#: ``_IVF_SQ8_INDEX_CACHE`` (write-once per (context, dataset, dataset
-#: version); dirs swept at process exit).  The index is METRIC-FREE:
-#: codes depend only on the corpus and the PQ codebooks, so one build
-#: serves the cosine, dot, and l2 variants.
-_IVF_PQ_INDEX_CACHE: dict[tuple[str, str, tuple], str] = {}
-
-
-def _sweep_ivf_pq_indexes() -> None:
-    import shutil
-
-    for d in _IVF_PQ_INDEX_CACHE.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _IVF_PQ_INDEX_CACHE.clear()
-
-
-atexit.register(_sweep_ivf_pq_indexes)
-
-
 def _ivfpq_search(
     spark: SparkSession,
     sf_dir: str,
@@ -1803,11 +1734,13 @@ def _ivfpq_search(
 
     # cid-PARTITIONED ON-DISK PQ-CODE INDEX (r17 — VERDICT r16 #2/#3,
     # replacing the r16 in-plan localCheckpoint barriers): the encode
-    # runs ONCE per (context, dataset version) over the FULL corpus and
-    # is written as ``(vec_id, codes array<tinyint>)`` partitioned by
+    # runs ONCE per dataset version over the FULL corpus and is
+    # written as ``(vec_id, codes array<tinyint>)`` partitioned by
     # ``cid`` — the ``sim_search_ivf_sq8_partitioned`` physical layout
-    # applied to PQ codes.  The PROBE then (a) prunes the non-probed
-    # (1 − nprobe/C) of the index at FILE LISTING time (a
+    # applied to PQ codes.  The index is METRIC-FREE (codes depend only
+    # on the corpus and the PQ codebooks), so one build serves the
+    # cosine, dot, and l2 variants.  The PROBE then (a) prunes the
+    # non-probed (1 − nprobe/C) of the index at FILE LISTING time (a
     # partition-column predicate → ``PartitionFilters``), (b) reads
     # 1-byte-per-subspace code bytes, never the float vectors, and (c)
     # never evaluates the 16-centroid assignment argmax (the pre-r17
@@ -1819,35 +1752,31 @@ def _ivfpq_search(
     # replaced eager localCheckpoints it KEEPS LINEAGE (an executor
     # loss recomputes instead of failing the query) and spills
     # MEMORY_AND_DISK; it is unpersisted as soon as the one-time write
-    # completes.  At 100 TB this is the real PQ index lifecycle: build
-    # once per corpus version, refresh one inverted list = overwrite
-    # one partition directory, probes pay nprobe/C of the rows ×
-    # PQ_M bytes each.
-    pq_index_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _embeddings_fingerprint(sf_dir),
-    )
-    index_dir = _IVF_PQ_INDEX_CACHE.get(pq_index_key)
-    if index_dir is None:
-        import tempfile
-
-        index_dir = tempfile.mkdtemp(prefix="ivf_pq_index_")
+    # completes or fails.  At 100 TB this is the real PQ index
+    # lifecycle: build once per corpus version, refresh one inverted
+    # list = overwrite one partition directory, probes pay nprobe/C of
+    # the rows × PQ_M bytes each.
+    def _build(d: str) -> None:
         staged = assigned.withColumn("vq", vq).persist()
-        (
-            staged.withColumn(
-                "codes",
-                F.array(*[_code(m) for m in range(PQ_M)]).cast(
-                    "array<tinyint>"
-                ),
+        try:
+            (
+                staged.withColumn(
+                    "codes",
+                    F.array(*[_code(m) for m in range(PQ_M)]).cast(
+                        "array<tinyint>"
+                    ),
+                )
+                .select("vec_id", "codes", "cid")
+                .write.mode("overwrite")
+                .partitionBy("cid")
+                .parquet(d)
             )
-            .select("vec_id", "codes", "cid")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(index_dir)
-        )
-        staged.unpersist()
-        _IVF_PQ_INDEX_CACHE[pq_index_key] = index_dir
+        finally:
+            staged.unpersist()
+
+    index_dir = index_store.index_dir(
+        "ivf_pq_index", sf_dir, "embeddings", _build
+    )
     coded = spark.read.parquet(index_dir).where(
         F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
     )
@@ -2494,7 +2423,7 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXECUTED PLAN (r16 — VERDICT r15 #5, the packed-BIGINT layout the
     r15 docstring promised): the sign bits are PACKED into BIGINT
     words — one per 64 dims — in a write-once persisted SKETCH STORE
-    (``_memo_index_dir`` protocol, same as the MinHash band index),
+    (``index_store`` protocol, same as the MinHash band index),
     and each probe scans ONLY the store: ``bit_count(word XOR
     probe_word)`` summed per row, TakeOrderedAndProject pool, then a
     {HAMMING_POOL}-row broadcast join back to the full-precision
@@ -2527,14 +2456,6 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _hamming_rerank_zipwith(spark, sf_dir)
     pwords = _pack_sign_words_py(pv)
 
-    from mapreduceplusplus_spark.llm.dedup import _memo_index_dir
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _embeddings_fingerprint(sf_dir),
-    )
-
     def _build(d: str) -> None:
         (
             emb.select(
@@ -2548,8 +2469,8 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(d)
         )
 
-    sketch_dir = _memo_index_dir(
-        _HAMMING_SKETCH_CACHE, key, "hamming_sketch", sf_dir, _build
+    sketch_dir = index_store.index_dir(
+        "hamming_sketch", sf_dir, "embeddings", _build
     )
     sk = spark.read.schema(
         "vec_id BIGINT, label INT, words ARRAY<BIGINT>"
@@ -2592,11 +2513,6 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).cast("bigint").alias("rnk"),
     )
 
-
-#: memoized on-disk packed-sign-bit sketch stores, keyed and
-#: lifecycle-managed exactly like the MinHash band index (atomic
-#: tmp+rename build, _COMPLETE marker, memo revalidation, TTL GC)
-_HAMMING_SKETCH_CACHE: dict[tuple[str, str, tuple], str] = {}
 
 #: powers of two for the sign-bit packer — entry i is the i-th bit of
 #: a 64-bit word as a SIGNED long (bit 63 is the long's sign bit; XOR
@@ -2954,7 +2870,7 @@ def sim_search_matryoshka_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment shape for MRL embedding models.
 
     EXECUTED PLAN: the {MRL_DIMS}-dim prefixes live in a write-once
-    persisted PREFIX STORE (``_memo_index_dir`` protocol — atomic
+    persisted PREFIX STORE (``index_store`` protocol — atomic
     tmp+rename build, same lifecycle as the Hamming sketch store); each
     probe scans ONLY the store (coarse cosine against the probe's
     prefix literals, micro-quantized integer rank key, vec_id
@@ -2988,14 +2904,6 @@ def sim_search_matryoshka_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _mrl_funnel_slice(spark, sf_dir)
     p16 = pv[:MRL_DIMS]
 
-    from mapreduceplusplus_spark.llm.dedup import _memo_index_dir
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _embeddings_fingerprint(sf_dir),
-    )
-
     def _build(d: str) -> None:
         (
             emb.select(
@@ -3011,8 +2919,8 @@ def sim_search_matryoshka_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(d)
         )
 
-    store_dir = _memo_index_dir(
-        _MRL_PREFIX_CACHE, key, "mrl_prefix", sf_dir, _build
+    store_dir = index_store.index_dir(
+        "mrl_prefix", sf_dir, "embeddings", _build
     )
     pre = spark.read.schema(
         "vec_id BIGINT, label INT, prefix ARRAY<DOUBLE>"
@@ -3049,12 +2957,6 @@ def sim_search_matryoshka_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
         F.row_number().over(w).cast("bigint").alias("rnk"),
     )
-
-
-#: memoized on-disk prefix stores, keyed and lifecycle-managed exactly
-#: like the Hamming sketch store (atomic tmp+rename build, _COMPLETE
-#: marker, memo revalidation, TTL GC)
-_MRL_PREFIX_CACHE: dict[tuple[str, str, tuple], str] = {}
 
 
 def _mrl_funnel_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3289,24 +3191,6 @@ def sim_search_ivf_sq8(
     )
 
 
-#: materialized cid-partitioned IVF,SQ8 code indexes — same lifecycle,
-#: keying, and sweep discipline as ``_IVF_INDEX_CACHE`` (write-once per
-#: (context, dataset, dataset version), lazily-consumed plans keep dirs
-#: alive until process exit)
-_IVF_SQ8_INDEX_CACHE: dict[tuple[str, str, tuple], str] = {}
-
-
-def _sweep_ivf_sq8_indexes() -> None:
-    import shutil
-
-    for d in _IVF_SQ8_INDEX_CACHE.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _IVF_SQ8_INDEX_CACHE.clear()
-
-
-atexit.register(_sweep_ivf_sq8_indexes)
-
-
 @query("sim_search_ivf_sq8_partitioned", oracle=_IVF_SQ8_ORACLE)
 def sim_search_ivf_sq8_partitioned(
     spark: SparkSession, sf_dir: str
@@ -3316,9 +3200,9 @@ def sim_search_ivf_sq8_partitioned(
     ``sim_search_ivf_sq8``'s docstring promises for 100 TB, realizing
     BOTH pruning axes at the I/O layer in one physical design:
 
-    1. INDEX BUILD (write-once, memoized like ``_IVF_INDEX_CACHE``):
-       the seed-centroid assignment plus the SQ8 quantization —
-       ``(vec_id, scale, codes array<tinyint>)`` written
+    1. INDEX BUILD (write-once per dataset version, in the shared
+       index store): the seed-centroid assignment plus the SQ8
+       quantization — ``(vec_id, scale, codes array<tinyint>)`` written
        ``partitionBy("cid")``.  The floats are NOT in the index: one
        directory per inverted list holding 1-B-wide codes (parquet
        stores tinyint as bit-packed/RLE INT(8) — the 1 B/dim contract;
@@ -3342,27 +3226,23 @@ def sim_search_ivf_sq8_partitioned(
     raise from ``_ivf_seed_lists`` (EMPTY_RAISES family).  Reference
     heritage: none (SURVEY §2 charter extension, similarity family)."""
     import math
-    import tempfile
 
     ensure_utc(spark)
     assigned, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _embeddings_fingerprint(sf_dir),
-    )
-    index_dir = _IVF_SQ8_INDEX_CACHE.get(key)
-    if index_dir is None:
-        index_dir = tempfile.mkdtemp(prefix="ivf_sq8_index_")
+
+    def _build(d: str) -> None:
         (
             assigned.withColumn("scale", _sq8_scale().cast("double"))
             .withColumn("codes", _sq8_codes("tinyint"))
             .select("vec_id", "scale", "codes", "cid")
             .write.mode("overwrite")
             .partitionBy("cid")
-            .parquet(index_dir)
+            .parquet(d)
         )
-        _IVF_SQ8_INDEX_CACHE[key] = index_dir
+
+    index_dir = index_store.index_dir(
+        "ivf_sq8_index", sf_dir, "embeddings", _build
+    )
 
     pq_lit = F.array(
         *[

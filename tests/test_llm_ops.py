@@ -1893,62 +1893,74 @@ def test_substring_spans_guarantee_floor_and_exact_extents(spark, tmp_path):
     assert not any(r.doc_a == r.doc_b for r in rows)
 
 
+def _adopt_only(d: str) -> None:
+    raise AssertionError(f"index store rebuilt into {d}, expected adoption")
+
+
+#: (query, store kind, source table) for the restart test — the two
+#: incremental-ingest stores and the IVF family's three persisted indexes
+_STORE_QUERIES = [
+    ("dedup_incremental_ingest_near", "neardup_index", "documents"),
+    ("dedup_semdedup_incremental", "semingest_index", "embeddings"),
+    ("sim_search_ivf_partitioned", "ivf_index", "embeddings"),
+    ("sim_search_ivfpq", "ivf_pq_index", "embeddings"),
+    ("sim_search_ivf_sq8_partitioned", "ivf_sq8_index", "embeddings"),
+]
+
+
+def _snapshot(d):
+    out = {}
+    for root, _dirs, files in os.walk(d):
+        for fn in files:
+            p = os.path.join(root, fn)
+            out[p] = os.stat(p).st_mtime_ns
+    return out
+
+
 def test_incremental_indexes_cold_start_recovery(spark):
     """VERDICT r12 #8 (stretch): the production RESTART path — a new
-    process has empty in-memory memos but the on-disk band/shingle and
-    member-embedding stores survive.  Simulate it (clear every memo,
-    keep disk) and pin that dedup_incremental_ingest_near AND
-    dedup_semdedup_incremental ADOPT the existing stores: identical
-    verdicts, and not one store file rewritten (same file set, same
-    mtime_ns — a rebuild cannot fake that)."""
-    import os
-
+    process has empty in-memory memos but the on-disk stores survive.
+    Simulate it (clear every memo, keep disk) and pin that the two
+    incremental-ingest queries AND the three persisted IVF-family
+    indexes ADOPT the existing stores: identical results, and not one
+    store file rewritten (same file set, same mtime_ns — a rebuild
+    cannot fake that).  The store path is looked up with a build that
+    fails if called, which itself proves a complete store exists."""
     import mapreduceplusplus_spark.llm.dedup as D
+    import mapreduceplusplus_spark.llm.similarity as S
     from mapreduceplusplus_spark import registry
+    from mapreduceplusplus_spark.llm.index_store import index_dir
     from tests.conftest import SF_DIR_ORACLE
-
-    def snapshot(d):
-        out = {}
-        for root, _dirs, files in os.walk(d):
-            for fn in files:
-                p = os.path.join(root, fn)
-                out[p] = os.stat(p).st_mtime_ns
-        return out
 
     def run(name):
         return sorted(
             map(tuple, registry.queries()[name](spark, SF_DIR_ORACLE).collect())
         )
 
-    D.release_shingles()
-    D._NEARDUP_INDEX_CACHE.clear()
-    D._SEMINGEST_INDEX_CACHE.clear()
+    def forget_memos():
+        D.release_shingles()
+        S._IVF_SEED_MEMO.clear()
+
+    forget_memos()
     try:
-        warm_near = run("dedup_incremental_ingest_near")
-        warm_sem = run("dedup_semdedup_incremental")
-        assert len(D._NEARDUP_INDEX_CACHE) == 1
-        assert len(D._SEMINGEST_INDEX_CACHE) == 1
-        near_dir = next(iter(D._NEARDUP_INDEX_CACHE.values()))
-        sem_dir = next(iter(D._SEMINGEST_INDEX_CACHE.values()))
-        snap_near, snap_sem = snapshot(near_dir), snapshot(sem_dir)
-        assert snap_near and snap_sem
+        warm = {q: run(q) for q, _kind, _table in _STORE_QUERIES}
+        dirs = {
+            q: index_dir(kind, SF_DIR_ORACLE, table, _adopt_only)
+            for q, kind, table in _STORE_QUERIES
+        }
+        snaps = {q: _snapshot(d) for q, d in dirs.items()}
+        assert all(snaps.values()), snaps
 
         # ---- "process restart": every in-memory memo gone, disk kept
-        D.release_shingles()
-        D._NEARDUP_INDEX_CACHE.clear()
-        D._SEMINGEST_INDEX_CACHE.clear()
+        forget_memos()
 
-        cold_near = run("dedup_incremental_ingest_near")
-        cold_sem = run("dedup_semdedup_incremental")
-        assert cold_near == warm_near
-        assert cold_sem == warm_sem
-        # adopted, not rebuilt: same dirs, same files, same mtimes
-        assert next(iter(D._NEARDUP_INDEX_CACHE.values())) == near_dir
-        assert next(iter(D._SEMINGEST_INDEX_CACHE.values())) == sem_dir
-        assert snapshot(near_dir) == snap_near
-        assert snapshot(sem_dir) == snap_sem
+        for q, kind, table in _STORE_QUERIES:
+            assert run(q) == warm[q], q
+            # adopted, not rebuilt: same dir, same files, same mtimes
+            assert index_dir(kind, SF_DIR_ORACLE, table, _adopt_only) == dirs[q]
+            assert _snapshot(dirs[q]) == snaps[q], q
     finally:
-        D.release_shingles()
+        forget_memos()
 
 
 def test_index_store_concurrency_protocol(spark):
@@ -1956,11 +1968,11 @@ def test_index_store_concurrency_protocol(spark):
     CONCURRENT process exiting — the old exit sweep rmtree'd the live
     store from under this process's lazily-consumed plan, the judged
     ``FileNotFoundError: .../bands`` — and (b) a partially-deleted /
-    vanished store dir, which must trigger a memo-invalidating REBUILD
-    rather than handing Spark a dead path.  Three pins:
+    vanished store dir, which must trigger a REBUILD rather than
+    handing Spark a dead path.  Three pins:
 
-    1. a subprocess that holds the store in its own memo cache and
-       exits (atexit fires) leaves the on-disk store byte-identical;
+    1. a subprocess that adopts the store and exits (atexit fires)
+       leaves the on-disk store byte-identical;
     2. a simulated partial dir (marker + one partition dir gone, the
        crash/raced-GC shape) rebuilds transparently: same verdicts;
     3. a fully vanished dir rebuilds transparently: same verdicts."""
@@ -1971,15 +1983,8 @@ def test_index_store_concurrency_protocol(spark):
 
     import mapreduceplusplus_spark.llm.dedup as D
     from mapreduceplusplus_spark import registry
+    from mapreduceplusplus_spark.llm.index_store import index_dir
     from tests.conftest import SF_DIR_ORACLE
-
-    def snapshot(d):
-        out = {}
-        for root, _dirs, files in os.walk(d):
-            for fn in files:
-                p = os.path.join(root, fn)
-                out[p] = os.stat(p).st_mtime_ns
-        return out
 
     def run(name):
         return sorted(
@@ -1989,28 +1994,31 @@ def test_index_store_concurrency_protocol(spark):
     D.release_shingles()
     try:
         warm = run("dedup_incremental_ingest_near")
-        key = next(iter(D._NEARDUP_INDEX_CACHE))
-        near_dir = D._NEARDUP_INDEX_CACHE[key]
-        snap = snapshot(near_dir)
+        near_dir = index_dir(
+            "neardup_index", SF_DIR_ORACLE, "documents", _adopt_only
+        )
+        snap = _snapshot(near_dir)
         assert snap
 
-        # ---- 1. concurrent process with the store in ITS memo exits:
+        # ---- 1. concurrent process that adopted the store exits:
         # under the pre-r16 exit sweep this rmtree'd the shared store;
         # now exit only clears that process's .tmp<pid> staging debris
         code = (
-            "import mapreduceplusplus_spark.llm.dedup as D\n"
-            f"D._NEARDUP_INDEX_CACHE[('app', 'sf', ())] = {near_dir!r}\n"
-            f"D._SEMINGEST_INDEX_CACHE[('app', 'sf', ())] = {near_dir!r}\n"
+            "from mapreduceplusplus_spark.llm.index_store import index_dir\n"
+            "def adopt_only(d):\n"
+            "    raise AssertionError(d)\n"
+            f"d = index_dir('neardup_index', {SF_DIR_ORACLE!r}, "
+            "'documents', adopt_only)\n"
+            f"assert d == {near_dir!r}, d\n"
         )
-        subprocess.run(
-            [sys.executable, "-c", code], check=True, cwd="/root/repo"
-        )
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        subprocess.run([sys.executable, "-c", code], check=True, cwd=repo)
         assert os.path.isdir(os.path.join(near_dir, "bands"))
-        assert snapshot(near_dir) == snap  # byte-identical, not rebuilt
+        assert _snapshot(near_dir) == snap  # byte-identical, not rebuilt
         assert run("dedup_incremental_ingest_near") == warm
 
         # ---- 2. partial dir: marker and one partition dir gone (a
-        # crashed builder / raced deletion) — memo revalidation must
+        # crashed builder / raced deletion) — the marker check must
         # force a rebuild, not serve the dead path
         os.remove(os.path.join(near_dir, "_COMPLETE"))
         shutil.rmtree(os.path.join(near_dir, "bands"))
@@ -2035,11 +2043,11 @@ def test_index_store_ttl_gc(tmp_path):
     import os
     import time
 
-    import mapreduceplusplus_spark.llm.dedup as D
+    import mapreduceplusplus_spark.llm.index_store as IS
 
     root = str(tmp_path)
-    old = time.time() - D._INDEX_STORE_TTL_S - 60
-    stale_tmp = time.time() - D._INDEX_STAGING_TTL_S - 60
+    old = time.time() - IS._INDEX_STORE_TTL_S - 60
+    stale_tmp = time.time() - IS._INDEX_STAGING_TTL_S - 60
     for name, when in [
         ("neardup_index_dead00", old),
         ("neardup_index_live00", None),
@@ -2050,13 +2058,96 @@ def test_index_store_ttl_gc(tmp_path):
         os.makedirs(d)
         if when is not None:
             os.utime(d, (when, when))
-    D._index_root_gc_done = False
+    IS._index_root_gc_done = False
     try:
-        D._gc_index_store_root(root)
+        IS._gc_index_store_root(root)
     finally:
-        D._index_root_gc_done = False
+        IS._index_root_gc_done = False
     left = sorted(os.listdir(root))
     assert left == ["neardup_index_live00", "semingest_index_y.tmp88888"]
+
+
+@pytest.fixture
+def private_store(tmp_path, monkeypatch):
+    """An index store rooted in a private temp dir over a one-file
+    'dataset' — the Spark-free harness for the store protocol."""
+    import tempfile
+
+    import mapreduceplusplus_spark.llm.index_store as IS
+
+    tmp = tmp_path / "tmp"
+    sf = tmp_path / "sf"
+    tmp.mkdir()
+    sf.mkdir()
+    (sf / "t.parquet").write_bytes(b"v1")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    monkeypatch.setattr(IS, "_index_root_gc_done", False)
+    return IS, str(sf)
+
+
+def _write_store(d: str) -> None:
+    import os
+
+    assert not os.path.exists(d), f"staging dir not clean: {os.listdir(d)}"
+    os.makedirs(d)
+    with open(os.path.join(d, "part-0"), "w") as fh:
+        fh.write("index")
+
+
+def test_index_store_raising_build_leaves_no_store(private_store):
+    """A build that writes part of its output and then raises installs
+    nothing: no final dir exists, the next call builds into a CLEAN
+    staging dir, and the installed store holds none of the debris."""
+    import os
+
+    IS, sf = private_store
+
+    def crash(d):
+        os.makedirs(d)
+        with open(os.path.join(d, "debris"), "w") as fh:
+            fh.write("partial")
+        raise OSError("disk full")
+
+    with pytest.raises(OSError, match="disk full"):
+        IS.index_dir("ivf_index", sf, "t", crash)
+    root = IS._index_store_root()
+    assert not [n for n in os.listdir(root) if ".tmp" not in n]
+
+    d = IS.index_dir("ivf_index", sf, "t", _write_store)
+    assert sorted(os.listdir(d)) == ["_COMPLETE", "part-0"]
+    assert os.listdir(root) == [os.path.basename(d)]
+    assert IS.index_dir("ivf_index", sf, "t", _adopt_only) == d
+
+
+def test_index_store_killed_build_is_never_adopted(private_store):
+    """A builder process killed mid-build (``os._exit``: no exception
+    handler, no exit hook) leaves only its ``.tmp<pid>`` staging dir;
+    the next caller never adopts it and builds a clean store."""
+    import os
+    import subprocess
+    import sys
+
+    IS, sf = private_store
+    root = IS._index_store_root()
+    code = (
+        "import os\n"
+        "from mapreduceplusplus_spark.llm.index_store import index_dir\n"
+        "def killed(d):\n"
+        "    os.makedirs(d)\n"
+        "    open(os.path.join(d, 'debris'), 'w').write('partial')\n"
+        "    os._exit(3)\n"
+        f"index_dir('ivf_index', {sf!r}, 't', killed)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=os.path.dirname(root))
+    proc = subprocess.Popen([sys.executable, "-c", code], cwd=repo, env=env)
+    assert proc.wait(timeout=300) == 3
+    (left,) = os.listdir(root)
+    assert left.startswith("ivf_index_") and left.endswith(f".tmp{proc.pid}")
+
+    d = IS.index_dir("ivf_index", sf, "t", _write_store)
+    assert os.path.basename(d) == left.split(".tmp")[0]
+    assert sorted(os.listdir(d)) == ["_COMPLETE", "part-0"]
 
 
 def test_ivfpq_small_corpus_degrade_matches_oracle(spark):

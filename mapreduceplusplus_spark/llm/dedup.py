@@ -32,6 +32,7 @@ from functools import reduce as _reduce
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.fixpoint import fixpoint
 from mapreduceplusplus_spark.llm import index_store
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
@@ -111,8 +112,9 @@ def shingles(text_col: Column, n: int = 3) -> Column:
     return shingles_of_tokens(tokens(text_col), n)
 
 
-#: memoized persisted shingle tables, keyed by (SparkSession, sf_dir) —
-#: the SESSION object, not the applicationId: sibling sessions from
+#: memoized persisted shingle tables, keyed by ``_docs_key`` (session,
+#: dir, table, content fingerprint) — the SESSION object, not the
+#: applicationId: sibling sessions from
 #: ``spark.newSession()`` share one application but carry their OWN conf
 #: (the hostile-config sweep relies on this), and a DataFrame resolved
 #: against one session silently executes under THAT session's conf, so
@@ -124,13 +126,6 @@ def shingles(text_col: Column, n: int = 3) -> Column:
 #: memoizing gives every caller THE SAME persisted plan, and
 #: ``release_shingles`` lets bench/tests drop the executor memory
 #: deterministically between timed queries.
-#: diagnostics from the last dedup_cluster_canonical run — round count
-#: and (doubled) edge count of the label-propagation loop, recorded for
-#: the SURVEY §6 scale-evidence decomposition (true-work growth vs
-#: serial section)
-_last_cluster_rounds: int | None = None
-_last_cluster_edges: int | None = None
-
 _SHINGLE_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -941,12 +936,8 @@ def _cc_min_label_propagation(
     rounds — O(d) rounds, so a long path costs one shuffle pair per
     hop.  Returns ``(labels(u, label), rounds)``.
 
-    Raises ``RuntimeError`` if the loop hits ``max_rounds`` with
-    changes still pending: an un-converged exit would silently emit
-    SPLIT clusters (two docs in one near-dup chain landing in
-    different "components"), which at scale means duplicate documents
-    surviving dedup with no error anywhere.  A loud failure is the
-    only safe behavior; the scale path is ``_cc_two_phase``.
+    ``fixpoint`` raises at ``max_rounds`` rather than emit split
+    clusters; the scale path is ``_cc_two_phase``.
 
     Every round ends in an eager ``localCheckpoint``: each round's
     frame references the previous one MULTIPLE times, so persist alone
@@ -963,10 +954,8 @@ def _cc_min_label_propagation(
         .withColumn("label", F.col("u"))
         .localCheckpoint(eager=True)
     )
-    rounds = 0
-    changed = 0
-    for _ in range(max_rounds):
-        rounds += 1
+
+    def step(labels: DataFrame) -> DataFrame:
         neigh = (
             edges.join(
                 labels.select(
@@ -977,7 +966,7 @@ def _cc_min_label_propagation(
             .groupBy("u")
             .agg(F.min("vlabel").alias("nmin"))
         )
-        new_labels = (
+        return (
             labels.join(neigh, "u", "left")
             .select(
                 "u",
@@ -987,23 +976,19 @@ def _cc_min_label_propagation(
             )
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "u")
+
+    def unchanged(old: DataFrame, new: DataFrame) -> bool:
+        return (
+            new.alias("n")
+            .join(old.alias("o"), "u")
             .where(F.col("n.label") != F.col("o.label"))
             .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected-components min-label propagation did not "
-            f"converge in {max_rounds} rounds ({changed} labels still "
-            f"changing): component diameter exceeds the round cap; "
-            f"use the large-star/small-star path (_cc_two_phase)"
-        )
-    return labels, rounds
+        ) == 0
+
+    return fixpoint(
+        "cc_min_label_propagation", labels, step,
+        max_rounds=max_rounds, done=unchanged,
+    )
 
 
 def _cc_two_phase(
@@ -1032,27 +1017,20 @@ def _cc_two_phase(
     shape as a propagation round, just fewer of them.  Fixpoint =
     every component is a star rooted at its minimum node; convergence
     is detected by edge-set equality (distinct canonical form, so
-    ``subtract``-count + cardinality check is exact).  Returns
+    the one-side-only row count is exact).  Returns
     ``(labels(u, label), rounds)`` over ALL input nodes (roots label
-    themselves).  Raises ``RuntimeError`` on non-convergence — a
-    silent cap-exit would emit split clusters.
+    themselves); the rounds run under ``fixpoint``.
 
     Each ROUND ends in one eager ``localCheckpoint`` — see
     ``_cc_min_label_propagation``: the round frame references the
     previous one several times, so persist alone lets the LOGICAL plan
-    grow exponentially with round count and Catalyst analysis becomes
-    the bottleneck long before the data does.  r17 round-action diet
-    (VERDICT r16 #8 applied to the shared CC core): a round is now TWO
-    driver actions (the ``nxt`` checkpoint + ONE set-equality
-    convergence probe) instead of four — the large-star intermediate
-    stays a PLAN (its ``distinct`` Exchange appears identically in
-    both small-star consumers, so ReuseExchange materializes it once
-    inside the ``nxt`` job; lineage depth stays O(1) because the plan
-    hangs off the checkpointed ``cur``), and the old ``count()`` +
-    ``subtract().count()`` pair collapses into one
-    tag-union/group/mismatch count, which is the same predicate:
-    both frames are distinct canonical edge sets, so (diff = 0 ∧
-    |nxt| = |cur|) ⟺ no (u, v) row sits in exactly one side.
+    grow exponentially with round count.  A round is TWO driver
+    actions: the ``nxt`` checkpoint (the large-star intermediate stays
+    a plan; its ``distinct`` Exchange appears identically in both
+    small-star consumers, so ReuseExchange materializes it once) and
+    ONE convergence probe, a tag-union/group/mismatch count: both
+    frames are distinct canonical edge sets, so (diff = 0 ∧ |nxt| =
+    |cur|) ⟺ no (u, v) row sits in exactly one side.
     """
     # consumed once, by the final labels job — no standalone action
     nodes = edges.select("u").distinct()
@@ -1064,10 +1042,8 @@ def _cc_two_phase(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    rounds = 0
-    converged = False
-    for _ in range(max_rounds):
-        rounds += 1
+
+    def step(cur: DataFrame) -> DataFrame:
         und = cur.select("u", "v").unionAll(
             cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -1086,7 +1062,7 @@ def _cc_two_phase(
         # small-star over the (u > v)-directed ls edges: attach u
         # and all its smaller neighbors to the minimum neighbor
         mins2 = ls.groupBy("u").agg(F.min("v").alias("mn"))
-        nxt = (
+        return (
             ls.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("mn").alias("v"))
             .unionAll(mins2.select("u", F.col("mn").alias("v")))
@@ -1094,27 +1070,22 @@ def _cc_two_phase(
             .distinct()
             .localCheckpoint(eager=True)
         )
+
+    def unchanged(cur: DataFrame, nxt: DataFrame) -> bool:
         # ONE convergence probe over the two cached canonical sets:
         # rows present in exactly one side (1 = only nxt, 2 = only cur)
-        changed = (
+        return (
             nxt.select("u", "v", F.lit(1).alias("w"))
             .unionAll(cur.select("u", "v", F.lit(2).alias("w")))
             .groupBy("u", "v")
             .agg(F.sum("w").alias("w"))
             .where(F.col("w") != 3)
             .count()
-        )
-        cur = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"large-star/small-star connected components did not "
-            f"converge in {max_rounds} rounds (edge set still "
-            f"changing) — should be impossible below ~2^{max_rounds} "
-            f"nodes; refusing to emit potentially split clusters"
-        )
+        ) == 0
+
+    cur, rounds = fixpoint(
+        "cc_two_phase", cur, step, max_rounds=max_rounds, done=unchanged
+    )
     # at fixpoint cur is (child, root) star edges; roots have no row
     labels = nodes.join(
         cur.select("u", F.col("v").alias("root")), "u", "left"
@@ -1156,12 +1127,10 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternating the large/small orientation so path lengths roughly
     HALVE per round — O(log n) rounds instead of label propagation's
     O(diameter), so an adversarial near-dup chain of any realistic
-    length converges well inside the cap, and a cap overrun raises
-    ``RuntimeError`` instead of silently emitting split clusters
-    (each round is persisted + counted to keep lineage flat).  The
+    length converges well inside the ``fixpoint`` cap.  The
     O(diameter) min-label baseline survives as
-    ``_cc_min_label_propagation`` (same loud-failure contract) and is
-    pinned against this path in tests on a diameter-25 chain fixture.
+    ``_cc_min_label_propagation`` and is pinned against this path in
+    tests on a diameter-25 chain fixture.
     This is the iterative-algorithm pattern the brief names as
     legitimately non-SQL — yet it STILL gets a hard oracle: DuckDB
     computes the same components with a recursive CTE over the
@@ -1169,7 +1138,6 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Labels converge to the component minimum regardless of join
     schedule, so the result is deterministic."""
-    global _last_cluster_rounds, _last_cluster_edges
     ensure_utc(spark)
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.unionByName(
@@ -1183,9 +1151,8 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 6.0→3.4 s at sf0.1, 12.1→4.6 s at the 5× fixture)
     edges = edges.persist()
     try:
-        _last_cluster_edges = edges.count()  # materialize the persist
-        labels, rounds = _cc_two_phase(edges)
-        _last_cluster_rounds = rounds
+        edges.count()  # materialize the persist
+        labels, _rounds = _cc_two_phase(edges)
         # labels is already lineage-truncated (localCheckpoint) by the
         # helper — no driver materialization anywhere; on a real
         # cluster a reliable checkpoint()/table write is the

@@ -60,6 +60,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.fixpoint import fixpoint
 from mapreduceplusplus_spark.llm import index_store
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
@@ -1040,7 +1041,8 @@ def _lloyd_refine(
     d = 1 + (
         max(dim for _, cv in cents for dim in range(len(cv))) if cents else -1
     )
-    for _ in range(iters):
+
+    def step(cents: list) -> list:
         best = _ivf_assign_join(spark, eq, cents)
         upd = (
             eq.join(best, "vec_id")
@@ -1059,13 +1061,14 @@ def _lloyd_refine(
             s, n = int(r.s_micro), int(r.n)
             cq = (2 * (s + n * _IVF_SHIFT) + n) // (2 * n) - _IVF_SHIFT
             acc.setdefault(int(r.cid), {})[int(r.dim)] = cq / 1_000_000.0
-        cents = [
+        return [
             (cid, [acc[cid].get(i, 0.0) for i in range(d)])
             if cid in acc
             else (cid, cv)
             for cid, cv in cents
         ]
-    return cents
+
+    return fixpoint("lloyd_refine", cents, step, max_rounds=iters)[0]
 
 
 def _ivfk_assign_sql(cents: str, asg: str) -> str:

@@ -13,10 +13,12 @@ the pair set makes the graph simple (no multi-edges, no loops).
 from __future__ import annotations
 
 import os
+from functools import reduce as _reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.fixpoint import fixpoint
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
@@ -303,9 +305,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = e2.groupBy("src").agg(F.count("*").alias("outdeg")).localCheckpoint(
         eager=True
     )
-    pr = d.select(F.col("src").alias("v"), F.lit(_PR_UNIT).cast("bigint").alias("pr"))
-    for _ in range(_PR_ITERS):
-        pr = (
+
+    def step(pr: DataFrame) -> DataFrame:
+        return (
             e2.join(pr, e2["src"] == pr["v"])
             .join(d, "src")
             .groupBy(F.col("dst").alias("v2"))
@@ -320,6 +322,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("v2").alias("v"), "pr")
             .localCheckpoint(eager=True)
         )
+
+    pr0 = d.select(F.col("src").alias("v"), F.lit(_PR_UNIT).cast("bigint").alias("pr"))
+    pr, _rounds = fixpoint("pagerank", pr0, step, max_rounds=_PR_ITERS)
     return (
         pr.select(F.col("v").alias("vertex"), F.col("pr").alias("pr_micro"))
         .orderBy(F.col("pr_micro").desc(), "vertex")
@@ -399,9 +404,8 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop then works on the (much smaller) vertex-pair relation,
     halving star depth each alternation, with every round
     localCheckpointed so lineage stays O(1) (the iterate-and-truncate
-    convention shared by ``graph_pagerank`` / ``ml_kmeans_lloyd``).
-    Non-convergence inside the round cap raises instead of emitting
-    split components (VERDICT r8 item 1 contract)."""
+    convention shared by ``graph_pagerank`` / ``ml_kmeans_lloyd``),
+    under ``fixpoint``'s round cap."""
     from mapreduceplusplus_spark.llm.dedup import _cc_two_phase
 
     ensure_utc(spark)
@@ -437,18 +441,17 @@ def kcore_subgraph(edges: DataFrame, k: int = _KCORE_K) -> tuple[DataFrame, int]
     degree = one map-side-combined hash aggregate; survivors = a
     degree filter; the next edge set = two hash semi-joins (u
     surviving, v surviving).  Rounds are localCheckpointed
-    (iterate-and-truncate, the ``_cc_two_phase`` convention) and the
-    loop exits when the edge count stops changing — by construction
-    that is the k-core.  Worst case (a path peeling one vertex per
-    round) needs O(n) rounds; real graphs peel in a handful, and the
-    cap RAISES instead of returning a not-yet-converged subgraph.
+    (iterate-and-truncate, the ``_cc_two_phase`` convention) and run
+    under ``fixpoint`` until the edge count stops changing — by
+    construction that is the k-core.  Worst case (a path peeling one
+    vertex per round) needs O(n) rounds; real graphs peel in a
+    handful, well inside ``_KCORE_MAX_ROUNDS``.
 
     Returns ``(vertices(v, degree) of the k-core, rounds)``."""
     cur = edges.localCheckpoint(eager=True)
-    n_cur = cur.count()
-    rounds = 0
-    for _ in range(_KCORE_MAX_ROUNDS):
-        rounds += 1
+
+    def step(state: tuple[DataFrame, int]) -> tuple[DataFrame, int]:
+        cur = state[0]
         deg = cur.groupBy("u").agg(F.count("*").alias("d"))
         keep = deg.where(F.col("d") >= k).select("u").localCheckpoint(
             eager=True
@@ -458,16 +461,12 @@ def kcore_subgraph(edges: DataFrame, k: int = _KCORE_K) -> tuple[DataFrame, int]
             .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
             .localCheckpoint(eager=True)
         )
-        n_nxt = nxt.count()
-        cur = nxt
-        if n_nxt == n_cur:
-            break
-        n_cur = n_nxt
-    else:
-        raise RuntimeError(
-            f"k-core peeling did not converge in {_KCORE_MAX_ROUNDS} "
-            f"rounds — refusing to return a partially-peeled subgraph"
-        )
+        return nxt, nxt.count()
+
+    (cur, _n), rounds = fixpoint(
+        "kcore_subgraph", (cur, cur.count()), step,
+        max_rounds=_KCORE_MAX_ROUNDS, done=lambda old, new: old[1] == new[1],
+    )
     return cur.groupBy(F.col("u").alias("v")).agg(
         F.count("*").alias("degree")
     ), rounds
@@ -547,8 +546,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: BFS frontier-round cap — 64 covers any plausible diameter of the
 #: test graphs (the dense co-purchase graph's is ~3); the constructed
 #: chain fixture in tests/test_operator_edges.py drives ~25 rounds.
-#: Like the CC/k-core caps, overrun RAISES instead of returning
-#: partial distances.
 _SSSP_MAX_ROUNDS = 64
 #: oracle-side recursion depth bound (must exceed the true diameter;
 #: the differential would expose a too-small bound as a value mismatch).
@@ -572,32 +569,22 @@ def sssp_frontier(edges_sym: DataFrame, source: int) -> tuple[DataFrame, int]:
     Each round costs ONE equi-join of the current frontier against the
     edge list (hash-partitioned on the vertex key, co-shuffle-able
     with a pre-partitioned edge relation at scale) plus one anti-join
-    — against the LAST TWO frontier levels only (r17, VERDICT r16 #4):
-    on a SYMMETRIC edge relation (this helper's input contract — every
-    caller passes ``_symmetrize``d or both-ways edges) a neighbor of a
-    depth-d vertex has depth ∈ {d−1, d, d+1} (if dist(v) < d−1 then
-    its frontier neighbor u would have dist ≤ dist(v)+1 < d,
-    contradicting u ∈ F_d), so candidates can only collide with
-    F_d ∪ F_{d−1} and the anti-join side is BOUNDED by two level
-    sizes instead of the GROWING settled union the pre-r17 form
-    re-shuffled every round — at scale that was O(|V|) anti-join
-    bytes per round, now O(|frontier|).  The per-round ``distinct``
-    is keyed on ``v`` alone: each round's candidates share ONE depth,
-    so the old (v, dist) key carried a constant through the exchange
-    and the depth is attached as a literal after the anti-join
-    (narrower shuffle rows, guide §2.3).  The frontier only ever
-    holds the NEWLY reached vertices, so total work over the whole
-    run is O(Σ degree of reached vertices) — each edge relaxes at
-    most twice.  Only each
-    round's NEW frontier is localCheckpointed; the settled set stays a
-    LAZY union over those materialized leaves (r10 review: eagerly
-    re-checkpointing the whole settled set copied O(|V|·depth) rows
-    over a run — the lazy union reads the same leaves without the
-    per-round rewrite, and its lineage depth is bounded by the round
-    cap).  Round count = source eccentricity + 1 (the final round
-    that discovers the empty frontier is counted); overrunning
-    ``_SSSP_MAX_ROUNDS`` RAISES rather than emitting partial distances
-    (the loud-failure contract of VERDICT r8 item 1).
+    against the LAST TWO frontier levels only: on a SYMMETRIC edge
+    relation (this helper's input contract — every caller passes
+    ``_symmetrize``d or both-ways edges) a neighbor of a depth-d
+    vertex has depth ∈ {d−1, d, d+1} (if dist(v) < d−1 then its
+    frontier neighbor u would have dist ≤ dist(v)+1 < d, contradicting
+    u ∈ F_d), so the anti-join side is bounded by two level sizes,
+    not the growing settled union.  The per-round ``distinct`` is
+    keyed on ``v`` alone (each round's candidates share ONE depth,
+    attached as a literal after the anti-join).  The frontier only
+    holds NEWLY reached vertices, so each edge relaxes at most twice
+    over the run.  Each round's new level is localCheckpointed; the
+    settled set is a LAZY union over those leaves, which reads them
+    without copying O(|V|·depth) rows.  The rounds run under
+    ``fixpoint`` with the ``_SSSP_MAX_ROUNDS`` cap; round count =
+    source eccentricity + 1 (the round that finds the empty frontier
+    is counted).
 
     Returns ``(frame(v, dist), rounds)``; unreachable vertices are
     absent (the BFS semantics — callers wanting ∞ rows can left-join
@@ -606,35 +593,32 @@ def sssp_frontier(edges_sym: DataFrame, source: int) -> tuple[DataFrame, int]:
     level0 = spark.createDataFrame(
         [(source, 0)], "v BIGINT, dist BIGINT"
     ).localCheckpoint(eager=True)
-    levels = [level0]  # per-depth checkpointed leaves
-    frontier = level0.select("v")
-    prev = None  # F_{d-1}, v column only
-    rounds = 0
-    for depth in range(1, _SSSP_MAX_ROUNDS + 1):
-        rounds += 1
+
+    def step(levels: list[DataFrame]) -> list[DataFrame]:
+        # levels[d] is the checkpointed depth-d leaf; the next depth is
+        # len(levels), and only F_d ∪ F_{d-1} can collide with it
+        frontier = levels[-1].select("v")
         cand = (
             frontier.join(edges_sym, frontier["v"] == edges_sym["u"])
             .select(edges_sym["v"].cast("bigint").alias("v"))
             .distinct()
         )
-        seen = frontier if prev is None else frontier.unionByName(prev)
+        seen = frontier
+        if len(levels) > 1:
+            seen = frontier.unionByName(levels[-2].select("v"))
         new = (
             cand.join(seen, "v", "left_anti")
-            .select("v", F.lit(depth).cast("bigint").alias("dist"))
+            .select("v", F.lit(len(levels)).cast("bigint").alias("dist"))
             .localCheckpoint(eager=True)
         )
-        if new.isEmpty():
-            settled = levels[0]
-            for lv in levels[1:]:  # lazy over checkpointed leaves
-                settled = settled.unionByName(lv)
-            return settled, rounds
-        levels.append(new)
-        prev = frontier
-        frontier = new.select("v")
-    raise RuntimeError(
-        f"BFS did not exhaust its frontier in {_SSSP_MAX_ROUNDS} rounds — "
-        f"refusing to return partial shortest-path distances"
+        return levels + [new]
+
+    levels, rounds = fixpoint(
+        "sssp_frontier", [level0], step, max_rounds=_SSSP_MAX_ROUNDS,
+        done=lambda _old, new: new[-1].isEmpty(),
     )
+    # lazy union over the checkpointed leaves; the last one is empty
+    return _reduce(DataFrame.unionByName, levels[1:-1], levels[0]), rounds
 
 
 def bellman_ford(
@@ -654,8 +638,8 @@ def bellman_ford(
     v); convergence = an empty anti-join of the new relation against
     the old (no row improved, none added).  Rounds ≤ the longest
     shortest-path EDGE COUNT + 1; localCheckpoint per round
-    (iterate-and-truncate), RuntimeError on cap overrun — never a
-    partially-relaxed answer.  At scale the distance relation
+    (iterate-and-truncate), under ``fixpoint`` with the
+    ``_SSSP_MAX_ROUNDS`` cap.  At scale the distance relation
     co-partitions with the edge list on the vertex key, so every
     round is one co-located shuffle join + one combine-enabled agg."""
     dist = sources.select(
@@ -663,26 +647,25 @@ def bellman_ford(
         F.col("source").cast("bigint").alias("v"),
         F.lit(0).cast("bigint").alias("dist"),
     ).localCheckpoint(eager=True)
-    rounds = 0
-    for _ in range(_SSSP_MAX_ROUNDS):
-        rounds += 1
+
+    def step(dist: DataFrame) -> DataFrame:
         relax = dist.join(edges_w, dist["v"] == edges_w["u"]).select(
             dist["source"],
             edges_w["v"].cast("bigint").alias("v"),
             (dist["dist"] + edges_w["w"]).alias("dist"),
         )
-        nxt = (
+        return (
             dist.unionByName(relax)
             .groupBy("source", "v")
             .agg(F.min("dist").alias("dist"))
             .localCheckpoint(eager=True)
         )
-        if nxt.join(dist, ["source", "v", "dist"], "left_anti").isEmpty():
-            return nxt, rounds
-        dist = nxt
-    raise RuntimeError(
-        f"Bellman-Ford did not reach a fixpoint in {_SSSP_MAX_ROUNDS} "
-        f"rounds — refusing to return partially-relaxed distances"
+
+    return fixpoint(
+        "bellman_ford", dist, step, max_rounds=_SSSP_MAX_ROUNDS,
+        done=lambda old, new: new.join(
+            old, ["source", "v", "dist"], "left_anti"
+        ).isEmpty(),
     )
 
 
@@ -743,7 +726,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bellman_ford`` for the per-round cost shape and the loud-cap
     contract."""
     ensure_utc(spark)
-    # persisted pre-partitioned on the relaxation join key (r17) — the
+    # persisted pre-partitioned on the relaxation join key — the
     # same one-edge-shuffle-per-run device as ``graph_sssp``; the
     # per-round dist⋈edges join reuses this partitioning instead of
     # re-exchanging the edge list every Bellman-Ford round
@@ -760,7 +743,11 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         e2.select("u").distinct().where(F.col("u") % 7 == 0)
         .select(F.col("u").alias("source"))
     )
-    dist, _rounds = bellman_ford(e2, sources)
+    try:
+        # the result is a checkpoint leaf, never the cache
+        dist, _rounds = bellman_ford(e2, sources)
+    finally:
+        e2.unpersist()
     return dist.select(
         "source", F.col("v").alias("vertex"), F.col("dist")
     )
@@ -813,17 +800,13 @@ def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential.  See ``sssp_frontier`` for the per-round cost
     argument and the loud round-cap contract."""
     ensure_utc(spark)
-    # r17 (guide §2.4): the edge relation is PERSISTED pre-partitioned
-    # on the join key instead of localCheckpointed — an
-    # InMemoryRelation KEEPS its outputPartitioning visible to
-    # Catalyst (a checkpoint leaf reads back as UnknownPartitioning),
-    # so the per-round frontier⋈edges join stops re-exchanging the
-    # FULL edge list every round: one edge shuffle for the whole run
-    # instead of one per eccentricity level, and the cache keeps its
-    # lineage (fault-tolerant, unlike a localCheckpoint leaf).  The
-    # derive plan is two joins deep, so the lineage-growth argument
-    # for checkpointing does not apply; the source collect below
-    # materializes the cache eagerly.
+    # the edge relation is PERSISTED pre-partitioned on the join key,
+    # not localCheckpointed: an InMemoryRelation keeps its
+    # outputPartitioning visible to Catalyst (a checkpoint leaf reads
+    # back as UnknownPartitioning), so the per-round frontier⋈edges
+    # join reuses it — one edge shuffle for the whole run — and the
+    # cache keeps its lineage.  The source collect below materializes
+    # it; the ``finally`` releases it.
     sym = (
         _symmetrize(_copurchase_edges(spark, sf_dir))
         .repartition("u")
@@ -834,10 +817,14 @@ def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundaries and the IVF probe); an EMPTY graph has no source and
     # returns the empty typed frame, matching the oracle's NULL-seed
     # suppression
-    source = sym.agg(F.min("u")).collect()[0][0]
-    if source is None:
-        return spark.createDataFrame([], "vertex BIGINT, dist BIGINT")
-    dists, _rounds = sssp_frontier(sym, int(source))
+    try:
+        source = sym.agg(F.min("u")).collect()[0][0]
+        if source is None:
+            return spark.createDataFrame([], "vertex BIGINT, dist BIGINT")
+        # the result is a union of checkpoint leaves, never the cache
+        dists, _rounds = sssp_frontier(sym, int(source))
+    finally:
+        sym.unpersist()
     return dists.select(F.col("v").alias("vertex"), "dist")
 
 
@@ -872,16 +859,17 @@ def lpa_rounds(e2: DataFrame, iters: int) -> DataFrame:
     tie-break (count DESC, label ASC via ``min(struct(-cnt, lbl))``)
     is pinned on a constructed graph in ``tests/test_operator_edges.py``
     independent of the co-purchase derivation."""
-    lbl = e2.select(F.col("src").alias("v")).distinct().select(
+    lbl0 = e2.select(F.col("src").alias("v")).distinct().select(
         "v", F.col("v").alias("lbl")
     )
-    for _ in range(iters):
+
+    def step(lbl: DataFrame) -> DataFrame:
         cnt = (
             e2.join(lbl, e2["src"] == lbl["v"])
             .groupBy(F.col("dst"), F.col("lbl"))
             .agg(F.count("*").alias("cnt"))
         )
-        lbl = (
+        return (
             cnt.groupBy("dst")
             .agg(
                 F.min(
@@ -893,7 +881,8 @@ def lpa_rounds(e2: DataFrame, iters: int) -> DataFrame:
             .select(F.col("dst").alias("v"), F.col("s.l").alias("lbl"))
             .localCheckpoint(eager=True)
         )
-    return lbl
+
+    return fixpoint("lpa_rounds", lbl0, step, max_rounds=iters)[0]
 
 
 @query(

@@ -106,9 +106,9 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers.  At 100 TB: centroids stay k·d rows (broadcast side),
     vectors shuffle once per iteration on vec_id — the same shape
     MLlib's k-means uses, minus its driver-side centroid state.  A
-    production run would loop until convergence via the
-    ``dedup_cluster_canonical`` iterate-and-checkpoint pattern; two
-    fixed iterations keep the oracle finite.
+    production run would loop until convergence under
+    ``fixpoint.fixpoint`` (the shared round driver of the iterative
+    operators); two fixed iterations keep the oracle finite.
 
     Output: per-cluster membership count and total squared distance
     (the inertia decomposition), all BIGINT."""

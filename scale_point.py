@@ -100,7 +100,7 @@ def main() -> None:
     spark = get_spark(app_name="scale-point")
     registry.load_all()
     qs = registry.queries()
-    import mapreduceplusplus_spark.llm.dedup as dedup_mod
+    from mapreduceplusplus_spark.fixpoint import last_rounds
 
     try:
         for factor in factors:
@@ -111,8 +111,8 @@ def main() -> None:
                 for _ in range(args.reps):
                     spark.catalog.clearCache()
                     # reset so a PRIOR query's round count can never be
-                    # misattributed to this record (review r9)
-                    dedup_mod._last_cluster_rounds = None
+                    # misattributed to this record
+                    last_rounds.clear()
                     t0 = time.perf_counter()
                     rows = qs[name](spark, fdir).count()
                     walls.append(time.perf_counter() - t0)
@@ -122,8 +122,8 @@ def main() -> None:
                     "wall_sec": round(min(walls), 2),
                     "rows": rows,
                 }
-                if dedup_mod._last_cluster_rounds is not None:
-                    rec["cc_rounds"] = dedup_mod._last_cluster_rounds
+                if "cc_two_phase" in last_rounds:
+                    rec["cc_rounds"] = last_rounds["cc_two_phase"]
                 print(json.dumps(rec), flush=True)
     finally:
         if not args.keep:

@@ -1653,6 +1653,9 @@ def test_cc_chain_diameter25_baseline_fails_loud_twophase_converges(spark):
         assert rounds <= 7, f"two-phase took {rounds} rounds on diameter 25"
         got = {(r.u, r.label) for r in labels.collect()}
         assert got == {(i, 0) for i in range(26)}
+        # (c) ... but an undersized cap still raises, never a partial labeling
+        with pytest.raises(RuntimeError, match="did not converge"):
+            _cc_two_phase(edges, max_rounds=1)
     finally:
         edges.unpersist()
 
@@ -1730,6 +1733,29 @@ def test_bellman_ford_two_hops_beat_heavy_direct_edge_and_cap_raises(spark):
             G._SSSP_MAX_ROUNDS = old
     finally:
         e2.unpersist()
+
+
+def test_sssp_queries_release_their_edge_cache(spark, tmp_path):
+    """``graph_sssp`` and ``graph_sssp_weighted`` persist their edge
+    relation for the rounds only: run on two dataset versions (symlinked
+    copies), the session's cached-relation count must not grow, and the
+    rows must not change."""
+    import os
+
+    qs = registry.queries()
+    versions = []
+    for tag in ("v1", "v2"):
+        d = tmp_path / tag
+        d.mkdir()
+        for name in os.listdir(SF_DIR_ORACLE):
+            os.symlink(os.path.join(SF_DIR_ORACLE, name), d / name)
+        versions.append(str(d))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for name in ("graph_sssp", "graph_sssp_weighted"):
+        before = cache.cachedData().size()
+        rows = [sorted(map(tuple, qs[name](spark, d).collect())) for d in versions]
+        assert cache.cachedData().size() == before, name
+        assert rows[0] == rows[1] and rows[0], name
 
 
 def test_r10_iterative_results_have_truncated_lineage_and_sane_joins(spark):
@@ -1874,7 +1900,7 @@ def test_count_min_sketch_bounds_and_determinism(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_kcore_cascade_fixture_and_independent_peel(spark):
+def test_kcore_cascade_fixture_and_independent_peel(spark, monkeypatch):
     """graph_kcore pins (no SQL oracle — a greatest fixpoint):
     (a) constructed cascade fixture: K4 clique {10..13} with a pendant
         chain 1-2-3-10 → the 3-core is exactly the clique (each at
@@ -1896,6 +1922,13 @@ def test_kcore_cascade_fixture_and_independent_peel(spark):
     rows = sorted((r.v, r.degree) for r in core.collect())
     assert rows == [(10, 3), (11, 3), (12, 3), (13, 3)], rows
     assert rounds >= 2, rounds  # the chain cannot peel in one round
+    # a cap below the cascade depth raises instead of a half-peeled core
+    import mapreduceplusplus_spark.operators.graph as G
+
+    with monkeypatch.context() as m:
+        m.setattr(G, "_KCORE_MAX_ROUNDS", 1)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            kcore_subgraph(edges, 3)
 
     qs = registry.queries()
     got = qs["graph_kcore"](spark, SF_DIR_ORACLE).collect()
